@@ -17,20 +17,15 @@ import org.apache.spark.sql.SparkSession
  *  - UTC session timezone so results are reproducible and oracle-comparable.
  */
 object GraftSession {
-  def builder(master: String = "local[32]", cpus: Int = 32): SparkSession.Builder = {
-    val b = SparkSession.builder()
+  def builder(master: String = "local[32]", cpus: Int = 32): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus.toString)
-    // AQE starts wide and coalesces: big shuffles keep 8x cores partitions (smaller
-    // per-task sorts -> less spill on 100 TB-class SMJs), small ones coalesce back to
-    // ~advisory size so the extra granularity costs nothing when data is small.
-    // SPARK_GRAFT_NARROW_START disables the wide start for A/B measurement only: it
-    // exists to prove (or disprove) that wide-start is innocent when a bench number
-    // regresses on a noisy host.
-    if (!sys.env.contains("SPARK_GRAFT_NARROW_START"))
-      b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cpus * 8).toString)
-    b
+      // AQE starts wide and coalesces: big shuffles keep 8x cores partitions (smaller
+      // per-task sorts -> less spill on 100 TB-class SMJs), small ones coalesce back to
+      // ~advisory size so the extra granularity costs nothing when data is small.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cpus * 8).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -44,7 +39,6 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .withExtensions(new graft.plans.GraftExtensions)
-  }
 
   def get(master: String = "local[32]", cpus: Int = 32): SparkSession = {
     val spark = builder(master, cpus).getOrCreate()

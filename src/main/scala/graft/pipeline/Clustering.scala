@@ -38,19 +38,12 @@ import graft.sources.TableIO
  */
 object Clustering {
 
-  /** Squared L2 distance between two equal-length bigint array columns — exact.
-    * r14 (guide §4): the native codegen'd kernel replaces the
-    * `aggregate(zip_with(...))` pair of HigherOrderFunction lambdas, which were
-    * evaluated INTERPRETED per (vector, centroid) pair — n·k·dim interpreted steps
-    * per Lloyd round, three rounds per query. Same exact long arithmetic (null/length
-    * parity documented on the expression); kept in one place so the spec can pin the
-    * two forms equal. */
+  /** Squared L2 distance between two equal-length bigint array columns — exact long
+    * arithmetic in the native codegen'd kernel. An `aggregate(zip_with(...))` pair of
+    * higher-order lambdas would evaluate INTERPRETED per (vector, centroid) pair —
+    * n·k·dim interpreted steps per Lloyd round. */
   private def sqDist(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.VectorExpressions.sqDistLong(a, b)
-
-  /** The pre-r14 interpreted HOF twin — the A/B + equality-pin reference. */
-  private[graft] def sqDistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
 
   /** One Lloyd assignment: per vector, the (dist, cid)-minimal centroid. */
   private def assign(vectors: DataFrame, centroids: DataFrame): DataFrame =

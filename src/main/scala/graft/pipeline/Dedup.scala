@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoints
 
 import graft.functions.FastHash
 import graft.sources.TableIO
@@ -69,36 +70,18 @@ object Dedup {
       }.toDF("doc_id", "gh", "sz")
   }
 
-  /** Exact Jaccard for a (a_id, b_id) candidate-pair frame via hashed-gram intersection.
-    * The intersection is the native two-pointer `sorted_intersect_size` kernel over the
-    * sorted gram arrays — codegen, zero allocation per pair (array_intersect's per-row
-    * hash set measured ~10x slower over 125k candidates). */
-  /** Probe-only access to [[verifiedJaccard]] (DedupProbe's pre-r14 candidate twin). */
-  private[graft] def verifiedJaccardForProbe(candidates: DataFrame, g: DataFrame): DataFrame =
-    verifiedJaccard(candidates, g)
-
-  private def verifiedJaccard(candidates: DataFrame, g: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions.sortedIntersectSize
-    val ga = g.select(col("doc_id").as("a_id"), col("gh").as("ga"), col("sz").as("sza"))
-    val gb = g.select(col("doc_id").as("b_id"), col("gh").as("gb"), col("sz").as("szb"))
-    candidates
-      .join(ga, "a_id").join(gb, "b_id")
-      .withColumn("inter", sortedIntersectSize(col("ga"), col("gb")))
-      .withColumn("jacc",
-        col("inter") * lit(1.0) / (col("sza") + col("szb") - col("inter")))
-      .select(col("a_id"), col("b_id"), col("jacc"))
-  }
-
-  /** Threshold-aware [[verifiedJaccard]] (r14): same joins, but the intersect kernel
-    * bails out of a pair's merge as soon as its best-achievable Jaccard falls below the
-    * threshold (-1 sentinel; the row is dropped here, exactly as its true sub-threshold
-    * jacc would be by the caller's `jacc >= threshold`). On candidate sets that are
-    * >99.9% false positives — sf1 measured 15.7M candidates for 2.5k true pairs — the
-    * gate cuts most of each false pair's O(|a|+|b|) merge. Pairs at or above the
-    * threshold complete the full merge: emitted (a_id, b_id, jacc) rows are
-    * bit-identical to the ungated form filtered at the same threshold (DedupSpec pins
-    * this; callers still apply their own `jacc >= threshold` filter on top). */
-  private def verifiedJaccardGated(candidates: DataFrame, g: DataFrame,
+  /** Exact Jaccard for a (a_id, b_id) candidate-pair frame via hashed-gram
+    * intersection, keeping only pairs at or above `threshold`. The intersection is the
+    * native two-pointer `sorted_intersect_size` kernel over the sorted gram arrays —
+    * codegen, zero allocation per pair (array_intersect's per-row hash set measured
+    * ~10x slower over 125k candidates). The kernel bails out of a pair's merge as soon
+    * as its best-achievable Jaccard falls below the threshold (-1 sentinel; the row is
+    * dropped here, exactly as its true sub-threshold jacc would be by the caller's
+    * `jacc >= threshold`). On candidate sets that are >99.9% false positives — sf1
+    * measured 15.7M candidates for 2.5k true pairs — this cuts most of each false
+    * pair's O(|a|+|b|) merge. Pairs at or above the threshold complete the full merge,
+    * so their jacc is exact; callers still apply their own `jacc >= threshold` filter. */
+  private def verifiedJaccard(candidates: DataFrame, g: DataFrame,
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.graft.VectorExpressions.sortedIntersectSizeGated
     val ga = g.select(col("doc_id").as("a_id"), col("gh").as("ga"), col("sz").as("sza"))
@@ -222,7 +205,7 @@ object Dedup {
     val candidates = x.join(y, Seq("band", "bh"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id")).distinct()
-    verifiedJaccardGated(candidates, g, threshold) // r14: early-exit merge, see its doc
+    verifiedJaccard(candidates, g, threshold)
       .filter(col("jacc") >= threshold)
   }
 
@@ -328,7 +311,7 @@ object Dedup {
    * inverted index, as round 2 did, re-shuffles every index row per DAG branch instead.)
    */
   def ngramJaccardPairs(g: DataFrame, threshold: Double): DataFrame =
-    verifiedJaccardGated(ngramCandidates(g, threshold), g, threshold) // r14 early-exit merge
+    verifiedJaccard(ngramCandidates(g, threshold), g, threshold)
       .filter(col("jacc") >= threshold)
 
   /** N-gram Jaccard near-dup over the documents table (see [[ngramJaccardPairs]]) —
@@ -591,7 +574,7 @@ object Dedup {
         .join(labels.withColumnRenamed("component", "old"), Seq("doc_id"))
         .localCheckpoint()
       changed = next.filter(col("component") =!= col("old")).count()
-      checkpointed.unpersist()
+      Checkpoints.release(checkpointed)
       checkpointed = next
       labels = next.select(col("doc_id"), col("component"))
     }

@@ -19,8 +19,7 @@ import graft.sources.TableIO
  * |ΣX|x|Y|-row contingency frame (bounded by bin design, never by corpus size) is
  * localCheckpoint'd because it feeds four consumers whose per-consumer pruning
  * defeats ReuseExchange, and marginals broadcast-join back. Everything after the one
- * scan is arithmetic over that tiny frame. (The r12 form ran one scan per feature
- * per consumer — 12 scans for q_feature_mi's 3 features; see qFeatureMiImpl.)
+ * scan is arithmetic over that tiny frame.
  *
  * MI  = Σ_xy (n_xy/N) · ln(N·n_xy / (n_x·n_y))       (natural log, > 0 terms only by
  *                                                     construction since n_xy >= 1)
@@ -73,34 +72,14 @@ object FeatureStats {
    * `q_feature_mi`: score three candidate lineitem features against the return flag —
    * equal-width quantity bins, 5%-wide discount bins, and the categorical line status.
    *
-   * r13 (guide §1.2 — fewer passes): the r12 form ran [[dependence]] once per feature
-   * = THREE full lineitem scans (one per contingency build; everything downstream is
-   * |X|x|Y|-row arithmetic). Fused: ONE scan explodes each row into its three
-   * (feature, x) pairs map-side, ONE map-side-combined groupBy(feature, x, y) builds
-   * all three contingency tables at once, and the marginals/statistics carry the
-   * feature key through the same broadcast-join shape. 3 scans + 3 combiner shuffles
-   * → 1 scan + 1 (3x-wider but still |Σ X|x|Y|-bounded) combiner shuffle. Adopted off
-   * the interleaved A/B (bench_feature_mi_r13.json); per-cell values are identical,
-   * per-feature double-sum ORDER differs — inside the round-6/round-4 grain, and the
-   * oracle hash-matches. [[dependence]] keeps the single-feature contract for its
-   * API/tests.
+   * ONE scan explodes each row into its three (feature, x) pairs map-side, ONE
+   * map-side-combined groupBy(feature, x, y) builds all three contingency tables at
+   * once, and the marginals/statistics carry the feature key through the same
+   * broadcast-join shape — where [[dependence]] per feature would scan lineitem three
+   * times. Per-cell values equal the per-feature form's; the per-feature double-sum
+   * ORDER differs, inside the round-6/round-4 grain, and the oracle hash-matches.
    */
-  def qFeatureMi(spark: SparkSession, dir: String): DataFrame =
-    qFeatureMiImpl(spark, dir, fused = true)
-
-  private[graft] def qFeatureMiImpl(spark: SparkSession, dir: String,
-      fused: Boolean): DataFrame = {
-    if (!fused) {
-      val l = TableIO.lineitem(spark, dir)
-      val feats: Seq[(String, DataFrame => Column)] = Seq(
-        "qty_bin" -> (d => floor((col("l_quantity") - 1) / 10).cast("int")),
-        "disc_bin" -> (d => floor(col("l_discount") * 20).cast("int")),
-        "linestatus" -> (d => col("l_linestatus")))
-      return feats.map { case (name, f) =>
-        dependence(l, f(l).cast("string"), col("l_returnflag"))
-          .select(lit(name).as("feature"), col("mi6"), col("chi2r"))
-      }.reduce(_ unionByName _).orderBy(col("feature"))
-    }
+  def qFeatureMi(spark: SparkSession, dir: String): DataFrame = {
     val l = TableIO.lineitem(spark, dir)
     val pairs = array(
       struct(lit("qty_bin").as("feature"),

@@ -305,7 +305,6 @@ object StarCache {
   def tryEnsure(spark: SparkSession, sfDir: String, star: String, views: Seq[String],
                 sql: String => String): Boolean =
     try {
-      if (sys.env.contains("SPARK_GRAFT_NO_STAR")) return false // A/B: force the CTE path
       val sfHash = md5hex(sfDir)
       val dirName = s"v${Version}_${star}_${sfHash}_${stamp(spark, sfDir)}"
       val base = s"${System.getProperty("java.io.tmpdir")}/graft_star/$dirName"

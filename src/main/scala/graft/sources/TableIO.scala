@@ -59,10 +59,9 @@ object TableIO {
 
   /** Read Arrow-IPC (`.arrow` / Feather v2) files — the reference's namesake
     * arrow-data-source format. One file per task; schema from the file footer.
-    * See org.apache.spark.sql.graft.ArrowIpc for the mechanism. */
+    * See org.apache.spark.sql.graft.ArrowSourceV2 for the mechanism: column pruning
+    * reaches the scan and batches deliver columnar. */
   def readArrow(spark: SparkSession, path: String): DataFrame =
-    // DataSourceV2 path: column pruning reaches the scan, batches deliver columnar
-    // (ArrowSourceV2; the RDD-based ArrowIpc.read remains as the minimal fallback)
     spark.read.format(classOf[org.apache.spark.sql.graft.ArrowSourceV2].getName).load(path)
 
   /**

@@ -39,7 +39,9 @@ object PlanStability {
     .filter(k => k.startsWith("tpch_") || k.startsWith("tpcds_") || k.startsWith("ssb_"))
     .sorted
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] = {
+  /** Every node of a physical plan, descending through AQE stage and reuse wrappers and
+    * into reused subqueries. */
+  private[graft] def walk(p: SparkPlan): Seq[SparkPlan] = {
     val through: Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec        => Seq(q.plan)

@@ -142,19 +142,20 @@ case class L2Distance(left: Expression, right: Expression)
 
 /**
  * Exact squared L2 distance of two equal-length `array<long>` columns — the k-means
- * assignment kernel (r14, guide §4): the previous `aggregate(zip_with(a, b,
- * (x,y) => (x-y)*(x-y)), 0L, _+_)` form evaluates TWO HigherOrderFunction lambdas
- * interpreted per (vector, centroid) pair — n·k·dim interpreted steps per Lloyd round.
- * This is the same long arithmetic ((x-y)² summed in a long accumulator, exact and
- * order-independent — what makes the fixed-point k-means oracle-able) as one codegen'd
- * loop. Null parity with the HOF form: a length mismatch (zip_with pads with null) or
- * a null element yields a null distance.
+ * assignment kernel. An `aggregate(zip_with(a, b, (x,y) => (x-y)*(x-y)), 0L, _+_)`
+ * form evaluates TWO HigherOrderFunction lambdas interpreted per (vector, centroid)
+ * pair — n·k·dim interpreted steps per Lloyd round. This is the same long arithmetic
+ * ((x-y)² summed in a long accumulator, exact and order-independent — what makes the
+ * fixed-point k-means oracle-able) as one codegen'd loop. Null parity with the HOF
+ * form: a length mismatch (zip_with pads with null) or a null element yields a null
+ * distance, so the result is nullable even over non-nullable inputs.
  */
 case class SqDistLong(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "sq_dist_long"
 

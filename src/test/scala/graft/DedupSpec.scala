@@ -106,9 +106,8 @@ class DedupSpec extends AnyFunSuite {
     } finally g.unpersist()
   }
 
-  test("r14 gated verification equals the ungated kernel at every threshold") {
+  test("gated ngram verification equals a driver-side Jaccard at every threshold") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // random doc corpus with planted near-dups at several similarity grades
     val rnd = new scala.util.Random(73)
     val vocab = Vector.tabulate(60)(i => s"w$i")
@@ -123,17 +122,23 @@ class DedupSpec extends AnyFunSuite {
     }
     val docs = (base ++ mutated).toDF("doc_id", "text")
     val g = Dedup.gramHashSets(docs).cache()
+    val sets = g.select($"doc_id", $"gh").as[(Long, Seq[Long])].collect()
+      .map { case (id, gh) => id -> gh.toSet }.sortBy(_._1)
     for (t <- Seq(0.3, 0.5, 0.8)) {
-      val gated = Dedup.ngramJaccardPairs(g, t)
-        .select($"a_id", $"b_id", round($"jacc", 9).as("j"))
-        .collect().map(_.toSeq).toSet
-      val ungated = Dedup.verifiedJaccardForProbe(Dedup.ngramCandidates(g, t), g)
-        .filter($"jacc" >= t)
-        .select($"a_id", $"b_id", round($"jacc", 9).as("j"))
-        .collect().map(_.toSeq).toSet
-      assert(gated == ungated, s"t=$t: gated verification diverged")
-      assert(gated.nonEmpty, s"t=$t: degenerate test corpus (no pairs)")
+      // the same double division on both sides, so the Jaccards match exactly
+      val got = Dedup.ngramJaccardPairs(g, t)
+        .select($"a_id", $"b_id", $"jacc").as[(Long, Long, Double)].collect().toSet
+      val want = (for {
+        i <- sets.indices; j <- i + 1 until sets.length
+        (a, sa) = sets(i); (b, sb) = sets(j)
+        inter = (sa & sb).size
+        jacc = inter * 1.0 / (sa.size + sb.size - inter)
+        if jacc >= t
+      } yield (a, b, jacc)).toSet
+      assert(got == want, s"t=$t: gated verification diverged")
+      assert(got.nonEmpty, s"t=$t: degenerate test corpus (no pairs)")
     }
+    g.unpersist()
   }
 
   test("a planted super-cap stop-gram generates zero candidate fan-out") {

@@ -22,6 +22,56 @@ class GraphOpsSpec extends AnyFunSuite {
     pr
   }
 
+  /** Bounded multi-source BFS over a directed edge list: minimum hop count <= maxHops. */
+  private def referenceBfs(edges: Seq[(Long, Long)], seeds: Seq[Long],
+      maxHops: Int): Map[Long, Int] = {
+    val out = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    var hops = seeds.map(_ -> 0).toMap
+    var frontier = seeds.toSet
+    (1 to maxHops).foreach { h =>
+      frontier = frontier.flatMap(out.getOrElse(_, Nil)).filterNot(hops.contains)
+      hops ++= frontier.map(_ -> h)
+    }
+    hops
+  }
+
+  /** Synchronous Bellman-Ford: after R rounds, the shortest distance over <= R edges. */
+  private def referenceSssp(edges: Seq[(Long, Long, Long)], seeds: Seq[Long],
+      rounds: Int): Map[Long, Long] = {
+    var dist = seeds.map(_ -> 0L).toMap
+    (1 to rounds).foreach { _ =>
+      val relaxed = edges.collect { case (u, v, w) if dist.contains(u) => v -> (dist(u) + w) }
+      dist = (dist.toSeq ++ relaxed).groupMapReduce(_._1)(_._2)(math.min)
+    }
+    dist
+  }
+
+  /** Synchronous label propagation over the deduplicated symmetric graph: each round
+    * every node takes its neighbors' most frequent label, ties to the smallest label. */
+  private def referenceLpa(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val nbrs = edges.distinct.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    var label = nbrs.keys.map(v => v -> v).toMap
+    (1 to rounds).foreach { _ =>
+      label = nbrs.map { case (v, ns) =>
+        v -> ns.groupBy(label).view.mapValues(_.size).toSeq
+          .minBy { case (l, cnt) => (-cnt, l) }._1
+      }
+    }
+    label
+  }
+
+  /** Bounded k-core peeling by re-counting the surviving edges each round: drop every
+    * vertex of degree < k, keep the edges between survivors; returns the final degrees. */
+  private def referenceKcore(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] = {
+    def degrees(es: Set[(Long, Long)]) = es.toSeq.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    var es = edges.toSet
+    (1 to rounds).foreach { _ =>
+      val keep = degrees(es).filter(_._2 >= k).keySet
+      es = es.filter { case (a, b) => keep(a) && keep(b) }
+    }
+    degrees(es)
+  }
+
   test("pageRank matches the in-memory power iteration on a hand graph") {
     import spark.implicits._
     // path 1-2-3 plus pendant 4 on 2 (symmetric): 2 is the hub
@@ -38,151 +88,113 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(math.abs(got.values.sum - 1.0) < 1e-9, "rank mass is conserved on a symmetric graph")
   }
 
-  test("packed-adjacency pageRank equals the row-per-edge twin bit-for-bit") {
+  test("pageRank matches the in-memory power iteration on a random symmetric graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     val raw = Seq.fill(500)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter { case (a, b) => a != b }
     val sym = raw ++ raw.map(_.swap)
-    val packed = GraphOps.pageRank(sym.toDF("src", "dst"), iterations = 3)
+    val got = GraphOps.pageRank(sym.toDF("src", "dst"), iterations = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val array = GraphOps.pageRankArray(sym.toDF("src", "dst"), iterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(packed.keySet == array.keySet)
-    // same per-node additions in a different grouping order can differ by float
-    // summation order; on these magnitudes the twins must still agree to 1e-12
-    packed.foreach { case (id, pr) =>
-      assert(math.abs(pr - array(id)) < 1e-12, s"node $id: packed $pr vs array ${array(id)}")
+    // pageRank deduplicates multi-edges; the reference counts every pair it is given
+    val want = referencePr(sym.distinct, 3)
+    assert(got.keySet == want.keySet)
+    // same per-node additions in a different grouping order differ only by float
+    // summation order, far inside 1e-12 on these magnitudes
+    got.foreach { case (id, pr) =>
+      assert(math.abs(pr - want(id)) < 1e-12, s"node $id: $pr vs reference ${want(id)}")
     }
   }
 
-  test("packed-adjacency bfs and labelPropagation equal their row-per-edge twins exactly") {
+  test("bfs and labelPropagation equal the driver-side references on a random graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(43)
     val raw = Seq.fill(600)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    // integer outputs: the twins must agree bit-for-bit, no tolerance
-    val lpP = GraphOps.labelPropagation(sym, rounds = 3)
+    val pairs = raw ++ raw.map(_.swap)
+    val sym = pairs.toDF("src", "dst")
+    // integer outputs: bit-for-bit, no tolerance
+    val lp = GraphOps.labelPropagation(sym, rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpA = GraphOps.labelPropagationArray(sym, rounds = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lpP == lpA)
-    val seeds = Seq(0L, 7L).toDF("id")
-    val bfP = GraphOps.bfs(sym, seeds, maxHops = 3)
+    assert(lp == referenceLpa(pairs, 3))
+    val bf = GraphOps.bfs(sym, Seq(0L, 7L).toDF("id"), maxHops = 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfA = GraphOps.bfsArray(sym, seeds, maxHops = 3)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfP == bfA)
+    assert(bf == referenceBfs(pairs, Seq(0L, 7L), 3))
   }
 
-  test("frontier-broadcast gate on/off produce identical bfs and sssp results") {
+  test("bfs and sssp equal the BFS and Bellman-Ford references on a random graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(53)
     val raw = Seq.fill(500)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
       .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    val seeds = Seq(0L, 5L).toDF("id")
-    val bfGated = GraphOps.bfsImpl(sym, seeds, maxHops = 3, gateFrontier = true)
+    val pairs = raw ++ raw.map(_.swap)
+    val seeds = Seq(0L, 5L)
+    val bf = GraphOps.bfs(pairs.toDF("src", "dst"), seeds.toDF("id"), maxHops = 3)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfPlain = GraphOps.bfsImpl(sym, seeds, maxHops = 3, gateFrontier = false)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfGated == bfPlain)
-    val wedges = raw.map { case (a, b) => (a, b, (1 + (a + b) % 7)) }.toDF("src", "dst", "w")
-    val ssGated = GraphOps.ssspImpl(wedges, seeds, rounds = 3, gateFrontier = true)
+    assert(bf == referenceBfs(pairs, seeds, 3))
+    val weighted = raw.map { case (a, b) => (a, b, 1 + (a + b) % 7) }
+    val ss = GraphOps.sssp(weighted.toDF("src", "dst", "w"), seeds.toDF("id"), rounds = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ssPlain = GraphOps.ssspImpl(wedges, seeds, rounds = 3, gateFrontier = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ssGated == ssPlain)
+    assert(ss == referenceSssp(weighted, seeds, 3))
   }
 
-  test("fused qSssp/qBfs prologues produce identical results to the unfused twins") {
-    // r13 prologue fusion: single checkpointed lineage (+ repartition(src) for sssp)
-    // must be a pure plan change — same rows, same values, both queries.
-    val ssOld = GraphOps.qSsspImpl(spark, sf, fusedPrologue = false)
-      .collect().map(_.toString).toSeq
-    val ssNew = GraphOps.qSsspImpl(spark, sf, fusedPrologue = true)
-      .collect().map(_.toString).toSeq
-    assert(ssOld == ssNew)
-    val bfOld = GraphOps.qBfsImpl(spark, sf, fusedPrologue = false)
-      .collect().map(_.toString).toSeq
-    val bfNew = GraphOps.qBfsImpl(spark, sf, fusedPrologue = true)
-      .collect().map(_.toString).toSeq
-    assert(bfOld == bfNew)
-  }
-
-  test("vertex-carry k-core equals the edge-rewrite peel bit-for-bit") {
+  test("kcorePeel equals the bounded-peeling reference over a k x rounds grid") {
     import spark.implicits._
     val rnd = new scala.util.Random(59)
     val raw = Seq.fill(900)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
       .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
+    val pairs = raw ++ raw.map(_.swap)
+    val sym = pairs.toDF("src", "dst")
     for (k <- Seq(2, 8, 15); rounds <- Seq(1, 3)) {
-      val edge = GraphOps.kcorePeel(sym, k, rounds)
+      val got = GraphOps.kcorePeel(sym, k, rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val vertex = GraphOps.kcorePeelVertex(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(edge == vertex, s"k=$k rounds=$rounds diverged")
+      assert(got == referenceKcore(pairs, k, rounds), s"k=$k rounds=$rounds diverged")
     }
-    // all-peels case: both empty
-    assert(GraphOps.kcorePeelVertex(sym, k = 500, rounds = 2).isEmpty)
+    // all-peels case: empty
+    assert(GraphOps.kcorePeel(sym, k = 500, rounds = 2).isEmpty)
   }
 
-  test("r14 packed decrement peel equals edge-rewrite and vertex-carry bit-for-bit") {
+  test("kcorePeel's incremental degree decrements equal re-counting the survivors") {
     import spark.implicits._
     val rnd = new scala.util.Random(61)
     val raw = Seq.fill(900)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
       .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
+    val pairs = raw ++ raw.map(_.swap)
+    val sym = pairs.toDF("src", "dst")
     for (k <- Seq(2, 8, 15); rounds <- Seq(1, 2, 4)) {
-      val packed = GraphOps.kcorePeelPacked(sym, k, rounds)
+      val got = GraphOps.kcorePeel(sym, k, rounds)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val edge = GraphOps.kcorePeelEdgeRewrite(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val vertex = GraphOps.kcorePeelVertex(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(packed == edge, s"k=$k rounds=$rounds packed vs edge-rewrite diverged")
-      assert(packed == vertex, s"k=$k rounds=$rounds packed vs vertex-carry diverged")
+      assert(got == referenceKcore(pairs, k, rounds), s"k=$k rounds=$rounds diverged")
     }
-    // all-peels case: empty through the packed path too
-    assert(GraphOps.kcorePeelPacked(sym, k = 500, rounds = 2).isEmpty)
   }
 
-  test("r14 pull iterations equal push bit-for-bit: pagerank, labelProp, bfs, ssspCache") {
+  test("pageRank and labelPropagation push past the vertex gate equals the gated pull") {
     import spark.implicits._
     val rnd = new scala.util.Random(67)
     val raw = Seq.fill(700)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
       .filter { case (a, b) => a != b }
     val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    // pagerank: double sums regroup, so compare at the query's own 6-decimal grain
-    // and to 1e-12 absolute (the twin-pin tolerance)
-    val prPull = GraphOps.pageRankImpl(sym, 3, 0.85, pull = true)
+    val prPull = GraphOps.pageRankImpl(sym, 3, 0.85)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val prPush = GraphOps.pageRankImpl(sym, 3, 0.85, pull = false)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val lpPull = GraphOps.labelPropagationImpl(sym, 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // gate 0 takes the cluster-scale push path; with Spark's auto-broadcast off too, its
+    // per-iteration joins are the shuffle joins a past-gate graph gets
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val (prPush, lpPush) = try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      (GraphOps.pageRankImpl(sym, 3, 0.85, gateVertices = 0L)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap,
+       GraphOps.labelPropagationImpl(sym, 3, gateVertices = 0L)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // pagerank: double sums regroup, so compare to 1e-12 absolute
     assert(prPull.keySet == prPush.keySet)
     prPull.foreach { case (id, pr) =>
       assert(math.abs(pr - prPush(id)) < 1e-12, s"node $id: pull $pr vs push ${prPush(id)}")
     }
     // labelProp: integer labels, exact
-    val lpPull = GraphOps.labelPropagationImpl(sym, 3, pull = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpPush = GraphOps.labelPropagationImpl(sym, 3, pull = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lpPull == lpPush)
-    // bfs pull (symmetric-only opt-in): integer hops, exact
-    val seeds = Seq(0L, 7L).toDF("id")
-    val bfPull = GraphOps.bfsImpl(sym, seeds, 3, gateFrontier = false, pullSymmetric = true)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfPush = GraphOps.bfsImpl(sym, seeds, 3, gateFrontier = false, pullSymmetric = false)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfPull == bfPush)
-    // qSssp prologue cache-vs-checkpoint is a pure plan change: same rows
-    val ssCache = GraphOps.qSsspImpl(spark, sf, fusedPrologue = true, prologueCache = true)
-      .collect().map(_.toString).toSeq
-    val ssCkpt = GraphOps.qSsspImpl(spark, sf, fusedPrologue = true, prologueCache = false)
-      .collect().map(_.toString).toSeq
-    assert(ssCache == ssCkpt)
   }
 
   test("kcorePeel strips the pendant tail and keeps the clique; multi-edges count once") {
@@ -199,21 +211,42 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(GraphOps.kcorePeel(sym, k = 10, rounds = 1).isEmpty)
   }
 
-  test("row-per-vertex sssp equals the row-per-edge twin exactly") {
+  test("sssp equals the Bellman-Ford reference on a weighted multigraph") {
     import spark.implicits._
     val rnd = new scala.util.Random(47)
     // weighted digraph with deliberate multi-edges (min-plus must keep the cheapest)
     val edges = Seq.fill(700)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong,
         (1 + rnd.nextInt(9)).toLong))
       .filter { case (a, b, _) => a != b }
-      .toDF("src", "dst", "w")
-    val seeds = Seq(0L, 13L, 42L).toDF("id")
-    // integer min-plus: the twins must agree bit-for-bit, no tolerance
-    val packed = GraphOps.sssp(edges, seeds, rounds = 4)
+    val seeds = Seq(0L, 13L, 42L)
+    // integer min-plus: bit-for-bit, no tolerance
+    val got = GraphOps.sssp(edges.toDF("src", "dst", "w"), seeds.toDF("id"), rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val array = GraphOps.ssspArray(edges, seeds, rounds = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(packed == array)
+    assert(got == referenceSssp(edges, seeds, 4))
+  }
+
+  test("iterative operators release every checkpoint but the one they return") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(71)
+    val raw = Seq.fill(300)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .filter { case (a, b) => a != b }
+    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
+    val weighted = raw.map { case (a, b) => (a, b, 1 + (a + b) % 5) }.toDF("src", "dst", "w")
+    val seeds = Seq(0L, 9L).toDF("id")
+    val pairs = raw.filter { case (a, b) => a < b }.take(30).toDF("a_id", "b_id")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => GraphOps.pageRank(sym, iterations = 3)),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(sym, rounds = 3)),
+      "bfs" -> (() => GraphOps.bfs(sym, seeds, maxHops = 3)),
+      "sssp" -> (() => GraphOps.sssp(weighted, seeds, rounds = 3)),
+      "kcorePeel" -> (() => GraphOps.kcorePeel(sym, k = 8, rounds = 3)),
+      "connectedComponents" -> (() => graft.pipeline.Dedup.connectedComponents(pairs)))
+    ops.foreach { case (name, op) =>
+      val before = spark.sparkContext.getPersistentRDDs.size
+      assert(op().collect().nonEmpty, s"$name: empty result")
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after <= before + 1, s"$name left ${after - before} persisted RDDs")
+    }
   }
 
   test("q_pagerank returns a full top-50 with a total deterministic order") {

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.operators.SpatialOps
@@ -59,6 +60,10 @@ class SpatialMlSpec extends AnyFunSuite {
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq) // bit-stable rerun
   }
 
+  /** The interpreted higher-order-function form of sq_dist_long — its reference. */
+  private def sqDistHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, x) => acc + x)
+
   test("r14 native sq_dist_long equals the interpreted HOF form, incl. null/length parity") {
     import spark.implicits._
     import org.apache.spark.sql.graft.VectorExpressions.sqDistLong
@@ -70,15 +75,24 @@ class SpatialMlSpec extends AnyFunSuite {
     val df = rows.toDF("id", "a", "b")
     val both = df.select(col("id"),
         sqDistLong(col("a"), col("b")).as("native"),
-        Clustering.sqDistHof(col("a"), col("b")).as("hof"))
+        sqDistHof(col("a"), col("b")).as("hof"))
       .collect()
     both.foreach(r => assert(r.getLong(1) == r.getLong(2), s"row ${r.getLong(0)} diverged"))
     // length mismatch: zip_with pads with null -> HOF null; native must be null too
     val mism = Seq((1L, Array(1L, 2L), Array(1L, 2L, 3L))).toDF("id", "a", "b")
       .select(sqDistLong(col("a"), col("b")).as("native"),
-        Clustering.sqDistHof(col("a"), col("b")).as("hof"))
+        sqDistHof(col("a"), col("b")).as("hof"))
       .collect()(0)
     assert(mism.isNullAt(0) && mism.isNullAt(1))
+  }
+
+  test("sq_dist_long is nullable over non-nullable inputs and nulls a length mismatch") {
+    import org.apache.spark.sql.graft.VectorExpressions.sqDistLong
+    val in = spark.range(1)
+    assert(!in.schema("id").nullable, "the check needs non-nullable inputs")
+    val df = in.select(sqDistLong(array(col("id"), col("id")), array(col("id"))).as("d"))
+    assert(df.schema("d").nullable)
+    assert(df.collect().head.isNullAt(0))
   }
 
   // ----------------------------------------------------------------------- OLS

@@ -177,12 +177,20 @@ class TemporalFeatureSpec extends AnyFunSuite {
   }
 
   test("fused q_feature_mi equals the per-feature-scan twin") {
-    // r13 one-pass fusion: same contingency cells, same statistics, same rounding.
-    val old = FeatureStats.qFeatureMiImpl(spark, sf, fused = false)
+    // the one-pass fusion must give the same cells, statistics and rounding as one
+    // dependence() scan per feature
+    val l = graft.sources.TableIO.lineitem(spark, sf)
+    val feats = Seq(
+      "qty_bin" -> floor((col("l_quantity") - 1) / 10).cast("int"),
+      "disc_bin" -> floor(col("l_discount") * 20).cast("int"),
+      "linestatus" -> col("l_linestatus"))
+    val perFeature = feats.map { case (name, f) =>
+      FeatureStats.dependence(l, f.cast("string"), col("l_returnflag"))
+        .select(lit(name).as("feature"), col("mi6"), col("chi2r"))
+    }.reduce(_ unionByName _).orderBy(col("feature"))
       .collect().map(_.toString).toSeq
-    val fused = FeatureStats.qFeatureMiImpl(spark, sf, fused = true)
-      .collect().map(_.toString).toSeq
-    assert(old == fused)
+    val fused = FeatureStats.qFeatureMi(spark, sf).collect().map(_.toString).toSeq
+    assert(perFeature == fused)
   }
 
   // --- bloom semi-join reduction ----------------------------------------------------
